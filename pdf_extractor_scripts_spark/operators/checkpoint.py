@@ -7,8 +7,16 @@ parallelism; this is what lets N- and 4N-executor runs share checkpoints
 keyed on path+mtime (pdf_text_detector.py:131-135); here resumability is a
 first-class table (FIXTURES.md §4) written once per completed bucket.
 
-Resume = anti-join the input against completed (run_id, partition_key) rows —
-a broadcast anti-join (the checkpoint side is tiny: one row per bucket).
+Resume = the completed buckets of a run_id, read on the driver as a literal
+list (at most ``N_BUCKETS`` ints), become a ``NOT partition_key IN (…)``
+filter. No plan references the checkpoint table the run appends to, and the
+filter on the key expression lands on the input scan, below extraction.
+
+Layout: out_spans is one flat parquet table with ``partition_key`` as a plain
+column, appended once per attempt, so an attempt writes one file per task
+rather than one per bucket per task. (A table written by the older
+``partitionBy("partition_key")`` layout cannot take rows in this layout: Spark
+refuses to read a directory that mixes both.)
 
 Output commit protocol (manifest pattern — what Iceberg snapshot commits give
 you natively in production): every physical write of out_spans/metrics rows
@@ -26,7 +34,10 @@ from __future__ import annotations
 import os
 
 import pyspark.sql.functions as F
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
+
+N_BUCKETS = 64  # partition_key range: the resume and commit granularity
 
 
 def committed_outputs(spark: SparkSession, ckpt_dir: str) -> DataFrame:
@@ -158,31 +169,35 @@ def quality_report(spark: SparkSession, ckpt_dir: str) -> DataFrame:
     )
 
 
-def with_partition_key(df: DataFrame, n_buckets: int = 64) -> DataFrame:
+def with_partition_key(df: DataFrame, n_buckets: int = N_BUCKETS) -> DataFrame:
     return df.withColumn(
         "partition_key", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
     )
 
 
-def completed_buckets(spark: SparkSession, ckpt_dir: str, run_id: str) -> DataFrame | None:
-    path = os.path.join(ckpt_dir, "checkpoints")
+def completed_buckets(spark: SparkSession, ckpt_dir: str, run_id: str) -> list[int]:
+    """Buckets already committed for ``run_id``, collected to the driver."""
+    from ..schemas import CHECKPOINT_SCHEMA
+
     try:
-        ck = spark.read.parquet(path)
-    except Exception:
-        return None
-    return (
+        ck = spark.read.schema(CHECKPOINT_SCHEMA).parquet(os.path.join(ckpt_dir, "checkpoints"))
+    except AnalysisException:  # no run has committed into ckpt_dir yet
+        return []
+    rows = (
         ck.filter((F.col("run_id") == run_id) & (F.col("status") == "done"))
         .select("partition_key")
         .distinct()
+        .collect()
     )
+    return sorted(r[0] for r in rows)
 
 
-def resume_filter(df: DataFrame, spark: SparkSession, ckpt_dir: str, run_id: str) -> DataFrame:
-    """Drop documents in buckets already completed for this run_id."""
-    done = completed_buckets(spark, ckpt_dir, run_id)
-    if done is None:
+def resume_filter(df: DataFrame, done: list[int]) -> DataFrame:
+    """Drop documents in the ``done`` buckets (see completed_buckets). A
+    literal filter: the plan never reads the checkpoint table."""
+    if not done:
         return df
-    return df.join(F.broadcast(done), "partition_key", "left_anti")
+    return df.filter(~F.col("partition_key").isin(done))
 
 
 def write_outputs(
@@ -191,44 +206,42 @@ def write_outputs(
     ckpt_dir: str,
     run_id: str,
     attempt_id: str | None = None,
-) -> str:
-    """Write extracted spans partitioned by bucket, then per-bucket metrics
-    rows, then the checkpoint rows — the checkpoint write is the COMMIT (see
-    module docstring). Returns the attempt_id used."""
+) -> int:
+    """Commit ``result`` (extraction rows with a partition_key) as one
+    attempt: the out_spans rows, then per-bucket metrics rows, then the
+    checkpoint rows — the checkpoint write is the COMMIT (see module
+    docstring). ``result`` is persisted so that it is computed once: the
+    out_spans append and the per-bucket stats both read the cached rows.
+    Returns the number of documents committed."""
+    import datetime
     import uuid
 
-    attempt_id = attempt_id or uuid.uuid4().hex
-    out_path = os.path.join(ckpt_dir, "out_spans")
-    ck_path = os.path.join(ckpt_dir, "checkpoints")
-    mx_path = os.path.join(ckpt_dir, "metrics")
-
-    result.select(
-        "partition_key", "doc_id", "vendor", "route", "out_spans",
-        "validation_failed", "ocr_used", "n_pages", "extraction_confidence",
-    ).withColumn("run_id", F.lit(run_id)).withColumn(
-        "attempt_id", F.lit(attempt_id)
-    ).write.mode("append").partitionBy("partition_key").parquet(out_path)
-
-    # Materialize the per-bucket stats on the driver (one tiny row per
-    # bucket) and write checkpoint + metrics from FRESH DataFrames. Writing
-    # them lazily would re-evaluate a lineage that (on a resumed run) reads
-    # the checkpoint table this very call appends to — a self-referential
-    # plan that silently yields zero rows on recompute.
-    import datetime
-
-    stat_rows = (
-        result.groupBy("partition_key")
-        .agg(
-            F.count(F.lit(1)).alias("docs"),
-            F.sum("n_pages").cast("long").alias("pages"),
-            F.sum("ocr_used").cast("long").alias("ocr_fallbacks"),
-            F.sum("validation_failed").cast("long").alias("validation_failures"),
-        )
-        .collect()
-    )
-    now = datetime.datetime.now()
     from ..schemas import CHECKPOINT_SCHEMA, METRICS_SCHEMA
 
+    attempt_id = attempt_id or uuid.uuid4().hex
+    result = result.persist()
+    try:
+        stat_rows = (
+            result.groupBy("partition_key")
+            .agg(
+                F.count(F.lit(1)).alias("docs"),
+                F.sum("n_pages").cast("long").alias("pages"),
+                F.sum("ocr_used").cast("long").alias("ocr_fallbacks"),
+                F.sum("validation_failed").cast("long").alias("validation_failures"),
+            )
+            .collect()
+        )
+        if not stat_rows:
+            return 0
+        result.select(
+            "doc_id", "vendor", "route", "out_spans", "validation_failed", "ocr_used",
+            "n_pages", "extraction_confidence", F.lit(run_id).alias("run_id"),
+            F.lit(attempt_id).alias("attempt_id"), "partition_key",
+        ).write.mode("append").parquet(os.path.join(ckpt_dir, "out_spans"))
+    finally:
+        result.unpersist()
+
+    now = datetime.datetime.now()
     # metrics BEFORE checkpoints: the checkpoint append is the commit point,
     # so a crash anywhere earlier leaves only uncommitted (orphan) rows.
     mx_rows = [
@@ -236,12 +249,13 @@ def write_outputs(
         for r in stat_rows
         for metric in ("docs", "pages", "ocr_fallbacks", "validation_failures")
     ]
-    spark.createDataFrame(mx_rows, schema=METRICS_SCHEMA).write.mode("append").parquet(mx_path)
-
+    spark.createDataFrame(mx_rows, schema=METRICS_SCHEMA).write.mode("append").parquet(
+        os.path.join(ckpt_dir, "metrics"))
     ck_rows = [
         (run_id, r["partition_key"], attempt_id, "done", r["docs"], r["pages"],
          r["ocr_fallbacks"], r["validation_failures"], now)
         for r in stat_rows
     ]
-    spark.createDataFrame(ck_rows, schema=CHECKPOINT_SCHEMA).write.mode("append").parquet(ck_path)
-    return attempt_id
+    spark.createDataFrame(ck_rows, schema=CHECKPOINT_SCHEMA).write.mode("append").parquet(
+        os.path.join(ckpt_dir, "checkpoints"))
+    return sum(r["docs"] for r in stat_rows)

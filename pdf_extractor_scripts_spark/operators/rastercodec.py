@@ -405,7 +405,10 @@ def decode_tiff(data: bytes) -> tuple[int, int, bytes]:
             dec = strip[:need]
         elif comp == 5:
             # max_out caps the LZW expansion at the strip's geometry (r7,
-            # ADVICE: unbounded decode could balloon ~2700x before slicing)
+            # ADVICE: unbounded decode could balloon ~2700x before slicing).
+            # Decoding stops once `need` bytes are out, so a stream that is
+            # corrupt only after those bytes is no longer detected: it
+            # returns the valid prefix instead of raising.
             dec = _lzw_decode(strip, max_out=need)
         elif comp == 32773:
             dec = _tiff_packbits(strip, need)

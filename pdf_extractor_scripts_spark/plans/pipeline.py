@@ -7,7 +7,7 @@ reference's batch runner (SURVEY.md §3.1).
       → weight + salted repartition (skew defense)
       → Arrow extraction UDF per route (masked inputs)
       → hybrid merge + deterministic span emission (native HOFs)
-      → [optional] checkpoint/lineage/metrics writes + idempotent resume
+      → [optional] one-pass checkpointed commit + idempotent resume
 
 Stage boundaries (shuffles) occur ONLY at the salted repartition and any
 downstream groupBy a caller adds — everything else is a single mapper chain
@@ -24,7 +24,9 @@ from ..operators.detect import with_assembled_text, with_vendor, with_route
 from ..operators.extract import with_extraction
 from ..operators.merge import with_merge, with_emission
 from ..operators.skew import with_weight, salted_repartition
-from ..operators.checkpoint import with_partition_key, resume_filter, write_outputs
+from ..operators.checkpoint import (
+    N_BUCKETS, completed_buckets, resume_filter, with_partition_key, write_outputs,
+)
 
 RESULT_COLS = [
     "doc_id", "vendor", "route", "out_spans",
@@ -69,18 +71,26 @@ def run_with_checkpoint(
     n_partitions: int | None = None,
 ) -> int:
     """Idempotent checkpointed run: skips completed buckets, writes spans +
-    checkpoint + metrics for the rest. Returns number of docs processed."""
-    keyed = with_partition_key(docs)
-    todo = resume_filter(keyed, spark, ckpt_dir, run_id)
-    result = run_pipeline(todo.drop("partition_key"), n_partitions)
-    result = with_partition_key(result)
-    # localCheckpoint truncates lineage: the writes below must NOT be able to
-    # re-evaluate a plan that reads the checkpoint table they append to.
-    result = result.localCheckpoint(eager=True)
-    n = result.count()
-    if n > 0:
-        write_outputs(result, spark, ckpt_dir, run_id)
-    return n
+    metrics + checkpoint for the rest in one extraction pass (see
+    operators/checkpoint.py). Returns the number of docs committed.
+
+    ``docs`` is a spans table, or rows ``run_pipeline`` already produced
+    (recognised by their ``out_spans`` column), as the extraction stream
+    passes them. For a spans table the completed-bucket filter sits on the
+    input, below extraction; already-extracted rows are filtered after the
+    fact, so a replayed micro-batch re-extracts its documents and then drops
+    the completed buckets before writing."""
+    done = completed_buckets(spark, ckpt_dir, run_id)
+    if len(done) >= N_BUCKETS:
+        return 0
+    if "out_spans" in docs.columns:
+        if "partition_key" not in docs.columns:
+            docs = with_partition_key(docs)
+        result = resume_filter(docs, done)
+    else:
+        todo = resume_filter(with_partition_key(docs), done)
+        result = with_partition_key(run_pipeline(todo.drop("partition_key"), n_partitions))
+    return write_outputs(result, spark, ckpt_dir, run_id)
 
 
 def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1,14 +1,20 @@
 """Incremental extraction: the batch pipeline wired to a streaming source.
 
-A production corpus is not static — new documents land continuously. This
-runs the SAME ``run_pipeline`` (identical semantics, identical span-equality
-contract) inside ``foreachBatch`` over a file/Iceberg-CDC stream:
+A production corpus is not static — new documents land continuously. Both
+entry points apply the SAME ``run_pipeline`` (identical semantics, identical
+span-equality contract) plus the bucket key to the streaming DataFrame once,
+when the query starts, so the extraction plan is built once per query rather
+than once per micro-batch. Each ``foreachBatch`` call is then one
+``run_with_checkpoint`` over rows that are already extracted:
 
 * Structured Streaming's source checkpoint gives exactly-once batch
   delivery (each input file processed once);
 * within a micro-batch the engine's own bucket checkpoint (operators/
-  checkpoint.py) records lineage + metrics, so a crashed micro-batch
-  resumes idempotently at bucket granularity when the stream restarts.
+  checkpoint.py) records lineage + metrics under a per-batch run_id
+  (``<run_id>-b<batch_id>``). The batch is persisted for the commit, so
+  its documents are extracted once. A replayed micro-batch re-extracts its
+  documents, then drops the buckets its run_id already committed before
+  writing, so the visible output stays exactly-once.
 
 This composition — streaming for ingestion bookkeeping, the deterministic
 batch plan for semantics — keeps the correctness contract testable (the
@@ -19,8 +25,27 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-from ..schemas import DOC_SCHEMA
+from ..operators.checkpoint import with_partition_key
+from ..plans import pipeline
 from ..plans.pipeline import run_with_checkpoint
+from ..schemas import DOC_SCHEMA
+
+
+def _start(spark: SparkSession, docs, out_dir: str, run_id: str,
+           stream_checkpoint: str | None):
+    """Extract ``docs`` (a streaming spans DataFrame) and commit each
+    micro-batch into ``out_dir`` under the run_id ``<run_id>-b<batch_id>``."""
+    # looked up on the module when the query starts, so a patched or wrapped
+    # plans.pipeline.run_pipeline applies to the stream too
+    extracted = with_partition_key(pipeline.run_pipeline(docs))
+
+    def process(batch_df, batch_id: int) -> None:
+        run_with_checkpoint(spark, batch_df, out_dir, run_id=f"{run_id}-b{batch_id}")
+
+    writer = extracted.writeStream.foreachBatch(process).trigger(availableNow=True)
+    if stream_checkpoint:
+        writer = writer.option("checkpointLocation", stream_checkpoint)
+    return writer.start()
 
 
 def start_extraction_stream(
@@ -41,16 +66,7 @@ def start_extraction_stream(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(source_dir)
     )
-
-    def process(batch_df, batch_id: int) -> None:
-        run_with_checkpoint(
-            spark, batch_df, out_dir, run_id=f"{run_id}-b{batch_id}"
-        )
-
-    writer = stream.writeStream.foreachBatch(process).trigger(availableNow=True)
-    if stream_checkpoint:
-        writer = writer.option("checkpointLocation", stream_checkpoint)
-    return writer.start()
+    return _start(spark, stream, out_dir, run_id, stream_checkpoint)
 
 
 def start_pdf_ingest_stream(
@@ -104,13 +120,4 @@ def start_pdf_ingest_stream(
             F.substring(path, len(prefix) + 1, 2**31 - 1),
         ).otherwise(path),
     )
-
-    def process(batch_df, batch_id: int) -> None:
-        run_with_checkpoint(
-            spark, batch_df, out_dir, run_id=f"{run_id}-b{batch_id}"
-        )
-
-    writer = parsed.writeStream.foreachBatch(process).trigger(availableNow=True)
-    if stream_checkpoint:
-        writer = writer.option("checkpointLocation", stream_checkpoint)
-    return writer.start()
+    return _start(spark, parsed, out_dir, run_id, stream_checkpoint)

@@ -105,3 +105,52 @@ def test_pdf_ingest_stream_arrival_driven(spark, tmpdir):
     q3 = start_pdf_ingest_stream(spark, src, out, stream_checkpoint=ck)
     q3.awaitTermination(120)
     assert spark.read.parquet(os.path.join(out, "out_spans")).count() == len(docs)
+
+
+def test_replayed_microbatch_commits_each_doc_once(spark, tmpdir):
+    """A micro-batch whose run_id (``<run_id>-b<batch_id>``) already
+    committed some buckets: the replay re-extracts the batch, drops the
+    committed buckets before writing, and the committed output holds each
+    document once."""
+    import pyspark.sql.functions as F
+
+    from pdf_extractor_scripts_spark.operators.checkpoint import (
+        committed_metrics,
+        committed_outputs,
+        with_partition_key,
+    )
+    from pdf_extractor_scripts_spark.plans.pipeline import run_with_checkpoint
+
+    n = 40
+    docs = corpus_df(spark, n_docs=n, seed=42)
+    src, out = os.path.join(tmpdir, "in"), os.path.join(tmpdir, "out")
+    docs.coalesce(1).write.parquet(src)  # one file → one micro-batch, id 0
+    half = with_partition_key(docs).filter(F.col("partition_key") < 32)
+    n0 = run_with_checkpoint(spark, half.drop("partition_key"), out, run_id="rs-b0")
+    assert 0 < n0 < n
+
+    q = start_extraction_stream(spark, src, out, run_id="rs",
+                                stream_checkpoint=os.path.join(tmpdir, "ck"))
+    q.awaitTermination(180)
+
+    assert spark.read.parquet(os.path.join(out, "out_spans")).count() == n
+    got = committed_outputs(spark, out)
+    assert got.count() == n and got.select("doc_id").distinct().count() == n
+    mx = committed_metrics(spark, out)
+    assert mx.filter(F.col("metric") == "docs").agg(F.sum("value")).first()[0] == n
+
+
+def test_microbatch_writes_one_data_file(spark, tmpdir):
+    """out_spans is a flat table: one micro-batch read from one landing
+    file adds one data file, not one per bucket."""
+    src, out = os.path.join(tmpdir, "in"), os.path.join(tmpdir, "out")
+    corpus_df(spark, n_docs=48, seed=42).coalesce(1).write.parquet(src)
+    q = start_extraction_stream(spark, src, out,
+                                stream_checkpoint=os.path.join(tmpdir, "ck"))
+    q.awaitTermination(180)
+
+    files = [f for _, _, fs in os.walk(os.path.join(out, "out_spans"))
+             for f in fs if f.endswith(".parquet")]
+    assert len(files) == 1, files
+    keys = spark.read.parquet(os.path.join(out, "out_spans")).select("partition_key")
+    assert keys.distinct().count() > 1  # the one file spans many buckets

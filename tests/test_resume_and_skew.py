@@ -55,6 +55,30 @@ def test_resume_is_idempotent_at_bucket_granularity(spark, ckpt_dir):
     assert mx.filter(F.col("metric") == "docs").agg(F.sum("value")).first()[0] == N_DOCS
 
 
+def test_resume_noop_short_circuits_when_every_bucket_is_done(spark, ckpt_dir, monkeypatch):
+    """Once all 64 buckets of a run_id are committed, a rerun returns 0
+    without building or running the pipeline, and the committed rows stay
+    as they were."""
+    from pdf_extractor_scripts_spark.operators.checkpoint import N_BUCKETS
+    from pdf_extractor_scripts_spark.plans import pipeline
+
+    docs = corpus_df(spark, n_docs=400, seed=42)
+    keys = {r[0] for r in with_partition_key(docs).select("partition_key").distinct().collect()}
+    assert keys == set(range(N_BUCKETS))  # the corpus covers every bucket
+    assert run_with_checkpoint(spark, docs, ckpt_dir, run_id="r1") == 400
+    before = sorted(tuple(r) for r in committed_outputs(spark, ckpt_dir)
+                    .select("doc_id", "attempt_id").collect())
+
+    def boom(*args, **kwargs):
+        raise AssertionError("run_pipeline called on a completed run")
+
+    monkeypatch.setattr(pipeline, "run_pipeline", boom)
+    assert run_with_checkpoint(spark, docs, ckpt_dir, run_id="r1") == 0
+    after = sorted(tuple(r) for r in committed_outputs(spark, ckpt_dir)
+                   .select("doc_id", "attempt_id").collect())
+    assert after == before and len(after) == 400
+
+
 def test_crash_between_data_and_checkpoint_write_is_invisible(spark, ckpt_dir):
     """Manifest-commit semantics: a run that dies AFTER appending out_spans
     but BEFORE its checkpoint rows must leave no visible output, and the
@@ -72,7 +96,7 @@ def test_crash_between_data_and_checkpoint_write_is_invisible(spark, ckpt_dir):
         "validation_failed", "ocr_used", "n_pages", "extraction_confidence",
     ).withColumn("run_id", F.lit("r1")).withColumn(
         "attempt_id", F.lit("dead-attempt")
-    ).write.mode("append").partitionBy("partition_key").parquet(f"{ckpt_dir}/out_spans")
+    ).write.mode("append").parquet(f"{ckpt_dir}/out_spans")
 
     # retry of the same run: resume sees no completed buckets, reprocesses all
     n = run_with_checkpoint(spark, docs, ckpt_dir, run_id="r1")
@@ -104,9 +128,8 @@ def test_backup_sink_snapshots_committed_outputs(spark, ckpt_dir):
     assert n == 16
     # plant an orphan attempt that the snapshot must exclude
     out = spark.read.parquet(f"{ckpt_dir}/out_spans")
-    out.withColumn("attempt_id", F2.lit("dead")).write.mode("append").partitionBy(
-        "partition_key"
-    ).parquet(f"{ckpt_dir}/out_spans")
+    out.withColumn("attempt_id", F2.lit("dead")).write.mode("append").parquet(
+        f"{ckpt_dir}/out_spans")
 
     dest = backup_outputs(spark, ckpt_dir, label="snap_0001")
     back = restore_backup(spark, dest)
