@@ -36,6 +36,7 @@ import os
 import pyspark.sql.functions as F
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 N_BUCKETS = 64  # partition_key range: the resume and commit granularity
 
@@ -200,6 +201,17 @@ def resume_filter(df: DataFrame, done: list[int]) -> DataFrame:
     return df.filter(~F.col("partition_key").isin(done))
 
 
+def local_rows(spark: SparkSession, rows: list[tuple], schema: StructType) -> DataFrame:
+    """Driver-side ``rows`` as a DataFrame whose plan is a ``LocalRelation``
+    (built from an Arrow table). ``createDataFrame`` over a list of tuples
+    plans a pickled Python RDD instead, which costs a Python-worker job per
+    write however few the rows."""
+    import pyarrow as pa
+
+    cols = {name: [r[i] for r in rows] for i, name in enumerate(schema.names)}
+    return spark.createDataFrame(pa.table(cols), schema)
+
+
 def write_outputs(
     result: DataFrame,
     spark: SparkSession,
@@ -241,7 +253,8 @@ def write_outputs(
     finally:
         result.unpersist()
 
-    now = datetime.datetime.now()
+    # timezone-aware: a naive datetime would be read in the session timezone
+    now = datetime.datetime.now(datetime.timezone.utc)
     # metrics BEFORE checkpoints: the checkpoint append is the commit point,
     # so a crash anywhere earlier leaves only uncommitted (orphan) rows.
     mx_rows = [
@@ -249,13 +262,13 @@ def write_outputs(
         for r in stat_rows
         for metric in ("docs", "pages", "ocr_fallbacks", "validation_failures")
     ]
-    spark.createDataFrame(mx_rows, schema=METRICS_SCHEMA).write.mode("append").parquet(
+    local_rows(spark, mx_rows, METRICS_SCHEMA).write.mode("append").parquet(
         os.path.join(ckpt_dir, "metrics"))
     ck_rows = [
         (run_id, r["partition_key"], attempt_id, "done", r["docs"], r["pages"],
          r["ocr_fallbacks"], r["validation_failures"], now)
         for r in stat_rows
     ]
-    spark.createDataFrame(ck_rows, schema=CHECKPOINT_SCHEMA).write.mode("append").parquet(
+    local_rows(spark, ck_rows, CHECKPOINT_SCHEMA).write.mode("append").parquet(
         os.path.join(ckpt_dir, "checkpoints"))
     return sum(r["docs"] for r in stat_rows)

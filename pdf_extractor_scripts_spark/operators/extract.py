@@ -1,13 +1,12 @@
-"""The vectorized extraction stage: one Arrow pandas UDF per route.
+"""The vectorized extraction stage: one Arrow pandas UDF, one result.
 
 The reference runs ~30 regex fields + vendor line-item scans per document in
 a Python loop (fallback_processor.py:196-242 dispatch); here one UDF call
 extracts everything for an Arrow batch of documents (SURVEY.md §2.10 UDF
-surface #3/#4). The UDF is applied twice — once over the text-route assembly,
-once over the stub-OCR assembly — each masked to the rows whose route needs
-it, so the expensive path only ever sees its own subset
-(fallback_processor.py:218-235 expensive-path gating, expressed as column
-masking instead of control flow).
+surface #3/#4). Both route assemblies (the text route's and the stub-OCR)
+ship to the UDF; the kernel resolves each row's route to ONE extraction
+input (audit §21) and returns one ``res`` struct per document, so no
+downstream merge of per-route results exists.
 """
 
 from __future__ import annotations
@@ -53,11 +52,6 @@ EXTRACT_RESULT = StructType(
 )
 
 
-BOTH_RESULT = StructType(
-    [StructField("t", EXTRACT_RESULT), StructField("o", EXTRACT_RESULT)]
-)
-
-
 def _make_extract_udf(field_banks: dict, field_order: dict):
     """Build the extraction UDF with the EFFECTIVE config captured by value.
 
@@ -68,8 +62,8 @@ def _make_extract_udf(field_banks: dict, field_order: dict):
     reach every executor without a side channel.
     """
 
-    @F.pandas_udf(BOTH_RESULT)
-    def _extract_both_udf(
+    @F.pandas_udf(EXTRACT_RESULT)
+    def _extract_udf(
         vendor: pd.Series,
         route: pd.Series,
         fb_primary: pd.Series,
@@ -85,28 +79,21 @@ def _make_extract_udf(field_banks: dict, field_order: dict):
         # P10 adequacy chain) instead of extracting both sides and merging.
         from .kernel import extract_routed
 
-        t, o = extract_routed(
+        return extract_routed(
             vendor, route, fb_primary, has1, has2, text, ocr, e1f, e2f,
             field_banks, field_order,
         )
-        return pd.DataFrame({"t": t, "o": o}, index=vendor.index)
 
-    return _extract_both_udf
+    return _extract_udf
 
 
-def with_extraction(df: DataFrame) -> DataFrame:
-    """Adds res_t / res_o struct columns. Input text columns are nulled out
-    for routes that don't need them so the kernel skips those rows
-    (expensive-path gating as column masking). Hybrid schlage rows get the
-    all-pages stub-OCR assembly as their OCR candidate (the reference's
-    multi-OCR renders every page — audit §21) plus the engine-confidence
-    scalar the O6 pick compares on the reference's 0-1 scale."""
-    from .. import config as C
+def extraction_inputs() -> list:
+    """The extraction UDF's argument columns, in its parameter order, over
+    a routed DataFrame (with_route's output). Hybrid schlage rows get the
+    all-pages stub-OCR assemblies per engine as their O6 candidates (the
+    reference's multi-OCR renders every page — audit §21)."""
     from .detect import _joined_expr
 
-    banks = {v: {k: list(p) for k, p in bank.items()} for v, bank in C.FIELD_BANKS.items()}
-    order = {v: list(ks) for v, ks in C.FIELD_ORDER.items()}
-    extract_udf = _make_extract_udf(banks, order)
     # both assemblies ship for every row since audit §22: the step-3b
     # fallback parses the OPPOSITE side's text (a text-method result falls
     # back to the OCR assembly and vice versa), so the old route masking
@@ -129,19 +116,20 @@ def with_extraction(df: DataFrame) -> DataFrame:
     has = lambda kind: F.expr(
         f"exists(spans, s -> s.kind = '{kind}' and trim(s.text) <> '')"
     )
-    from .colutil import add_cols, replace_cols
+    return [
+        F.col("vendor"), F.col("route"), F.col("fb_primary"),
+        has("media_text"), has("media_text_alt"),
+        text_in, ocr_in, e1f, e2f,
+    ]
 
-    df = add_cols(
-        df,
-        res_both=extract_udf(
-            F.col("vendor"), F.col("route"), F.col("fb_primary"),
-            has("media_text"), has("media_text_alt"),
-            text_in, ocr_in, e1f, e2f,
-        ),
-    )
-    return replace_cols(
-        df,
-        drop=("res_both",),
-        res_t=F.col("res_both.t"),
-        res_o=F.col("res_both.o"),
-    )
+
+def with_extraction(df: DataFrame) -> DataFrame:
+    """Adds the ``res`` struct column (``EXTRACT_RESULT``): the one
+    extraction each document's route resolves to."""
+    from .. import config as C
+    from .colutil import add_cols
+
+    banks = {v: {k: list(p) for k, p in bank.items()} for v, bank in C.FIELD_BANKS.items()}
+    order = {v: list(ks) for v, ks in C.FIELD_ORDER.items()}
+    extract_udf = _make_extract_udf(banks, order)
+    return add_cols(df, res=extract_udf(*extraction_inputs()))

@@ -236,12 +236,12 @@ def extract_routed(
     e2f: pd.Series,
     field_banks: dict | None = None,
     field_order: dict | None = None,
-) -> tuple[pd.Series, pd.Series]:
+) -> pd.DataFrame:
     """Route-aware extraction for one Arrow batch (audit §21 — the J1
     combiner is dead code in the reference; hybrids resolve to ONE
     extraction input):
 
-    * route 'text'/'ocr': extract that side (result in the matching slot);
+    * route 'text'/'ocr': extract that side;
     * hybrid schlage: O6 comprehensive pick between the selectable text
       and the all-pages stub-OCR candidate (dual-engine selection over
       the e1f/e2f assemblies via the independent.py twin), then one
@@ -252,7 +252,11 @@ def extract_routed(
       inadequate subset;
     * hybrid ceco/steelcraft: the specialized processors are text-only.
 
-    Hybrid results ride the 't' slot; the 'o' slot is None for them.
+    Generic rows whose input is the OCR side parse with the image bank
+    family, so the generic text bank never runs over them.
+
+    Returns the ``EXTRACT_RESULT`` columns (fields, items, info), one row
+    per document; all three are None where the row has no input text.
     """
     # List-based plumbing (r5): per-row pandas access (Series.__getitem__,
     # .loc/.at) cost ~20% of the kernel wall at 1000-row batches; pull the
@@ -265,7 +269,6 @@ def extract_routed(
     tl, ol = text.tolist(), ocr.tolist()
     e1l, e2l = e1f.tolist(), e2f.tolist()
     final: list = [None] * n
-    t_slot = [True] * n
     generic_hybrid: list[int] = []
     side_of: dict = {}  # generic rows: which side the final input came from
     for i in range(n):
@@ -276,7 +279,6 @@ def extract_routed(
             side_of[i] = "text"
         elif r == "ocr":
             final[i] = ol[i]
-            t_slot[i] = False
             side_of[i] = "ocr"
         else:
             if v == "schlage":
@@ -298,8 +300,17 @@ def extract_routed(
             else:
                 final[i] = tl[i]
 
+    # generic OCR-side rows take the image parse below (audit §23): the
+    # generic text bank's result for them would be discarded, so they
+    # reach extract_batch as null text
+    image_rows = [
+        i for i in range(n) if vl[i] == "generic" and side_of.get(i) == "ocr"
+    ]
+    bank_in = list(final)
+    for i in image_rows:
+        bank_in[i] = None
     res = extract_batch(
-        vendor, pd.Series(final, index=vendor.index, dtype=object),
+        vendor, pd.Series(bank_in, index=vendor.index, dtype=object),
         field_banks, field_order,
     )
     fields_l = res["fields"].tolist()
@@ -316,9 +327,8 @@ def extract_routed(
         items_l[i] = it
         info_l[i] = []
 
-    for i in range(n):
-        if vl[i] == "generic" and side_of.get(i) == "ocr":
-            _impose_image_parse(i)
+    for i in image_rows:
+        _impose_image_parse(i)
 
     # P10 adequacy second pass for generic hybrids (small subset)
     redo = []
@@ -383,20 +393,6 @@ def extract_routed(
         items_l[i] = i2
         info_l[i] = n2
 
-    t_col, o_col = [], []
-    for i in range(n):
-        cell = (
-            None
-            if fields_l[i] is None
-            else {"fields": fields_l[i], "items": items_l[i], "info": info_l[i]}
-        )
-        if t_slot[i]:
-            t_col.append(cell)
-            o_col.append(None)
-        else:
-            t_col.append(None)
-            o_col.append(cell)
-    return (
-        pd.Series(t_col, index=vendor.index, dtype=object),
-        pd.Series(o_col, index=vendor.index, dtype=object),
+    return pd.DataFrame(
+        {"fields": fields_l, "items": items_l, "info": info_l}, index=vendor.index
     )

@@ -60,9 +60,11 @@ def _coalesce_tiny_file_scan(df: DataFrame, path: str) -> DataFrame:
     whose scheduling overhead dwarfs the parse work (r7 measurement: the
     10k-file bench tree planned 313 tasks and ran 3.0 s; coalesced to the
     core count it runs 1.0 s, interleaved A/B). When the input is a LOCAL
-    directory its true size is one cheap os.walk away: if the scan holds
-    under 4 MB of REAL bytes per planned task, coalesce (no shuffle) down
-    to max(defaultParallelism, total/32MB) tasks. Non-local paths (object
+    directory, the real byte total of the files ``df`` (a binaryFile load)
+    reads comes from its own file index (the listing Spark already made,
+    with ``pathGlobFilter`` and ``recursiveFileLookup`` applied): if it is
+    under 4 MB per planned task, coalesce (no shuffle) down to
+    max(defaultParallelism, total/32MB) tasks. Non-local paths (object
     stores, HDFS) and healthy scans are left untouched — at cluster scale
     the split planner's own estimates govern, so this never narrows a real
     corpus scan."""
@@ -75,13 +77,10 @@ def _coalesce_tiny_file_scan(df: DataFrame, path: str) -> DataFrame:
         p = p[len("file:"):]
     if not os.path.isdir(p):
         return df
-    total = 0
-    for root, _dirs, files in os.walk(p):
-        for f in files:
-            try:
-                total += os.stat(os.path.join(root, f)).st_size
-            except OSError:
-                pass
+    rel = df._jdf.queryExecution().analyzed()
+    if rel.getClass().getSimpleName() != "LogicalRelation":
+        return df
+    total = rel.relation().location().sizeInBytes()
     n = df.rdd.getNumPartitions()
     if n <= 1 or total // n >= (4 << 20):
         return df
@@ -98,19 +97,18 @@ def read_binary_docs(
     """S2-S5 ingestion shape: binaryFile source → (doc_id, content, length);
     recurses into vendor subdirectories by default. Tiny-file trees are
     coalesced to a sane task count (see _coalesce_tiny_file_scan)."""
-    df = (
+    scan = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", glob)
         .option("recursiveFileLookup", "true" if recursive else "false")
         .load(path)
-        .select(
-            F.col("path").alias("doc_id"),
-            F.col("content"),
-            F.col("length"),
-            F.col("modificationTime").alias("mtime"),
-        )
     )
-    return _coalesce_tiny_file_scan(df, path)
+    return _coalesce_tiny_file_scan(scan, path).select(
+        F.col("path").alias("doc_id"),
+        F.col("content"),
+        F.col("length"),
+        F.col("modificationTime").alias("mtime"),
+    )
 
 
 def parse_binary_to_spans(binary_docs: DataFrame, fallback_acc=None,

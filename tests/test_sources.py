@@ -66,6 +66,29 @@ def test_binary_source_shape(spark, tmpdir):
     assert acc.value == 1
 
 
+def test_tiny_file_coalesce_counts_only_the_files_the_scan_reads(spark, tmp_path):
+    """The tiny-file coalesce sizes the scan by the files it actually reads:
+    a large file that pathGlobFilter excludes, or that sits in a
+    subdirectory of a non-recursive read, must not stop a tree of tiny
+    matching files from being coalesced to the core count."""
+    cores = spark.sparkContext.defaultParallelism
+    for i in range(400):
+        (tmp_path / f"d{i:03d}.pdf").write_bytes(b"%PDF-1.4 tiny")
+    (tmp_path / "sub").mkdir()
+    for big in (tmp_path / "skip.bin", tmp_path / "sub" / "big.pdf"):
+        with open(big, "wb") as f:
+            f.truncate(256 << 20)  # sparse: a large st_size, no data written
+
+    def tasks(**kw) -> int:
+        return read_binary_docs(spark, str(tmp_path), **kw).rdd.getNumPartitions()
+
+    # only the 400 tiny files are read: coalesced, though skip.bin and
+    # sub/big.pdf hold 512 MB between them
+    assert tasks(recursive=False) <= cores
+    # the recursive read does read sub/big.pdf, so the scan is not tiny
+    assert tasks() > cores
+
+
 def test_pdf_roundtrip_all_fixture_docs():
     """S2-S4 parse for real: every fixture doc rendered to actual PDF bytes
     (classic xref, FlateDecode streams) parses back to the identical span
